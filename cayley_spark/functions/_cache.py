@@ -1,12 +1,13 @@
 """Persist-handle tracking for operator intermediates.
 
 Operators like ``minhash_lsh_pairs`` and ``embedding_dup_pairs``
-persist expensive intermediates (shingle sets, LSH signatures) that
-the returned lazy plan references from both sides of a self-join.
-The persist is load-bearing — without it Catalyst's project-collapse
-inlines the signature pipeline into every join branch — but the
-returned DataFrame outlives the call, so the operator cannot
-unpersist before returning.
+persist expensive intermediates that the returned lazy plan
+references from several join branches: the MinHash operators persist
+one signature frame per side (shingle set and signature per
+document). The persist is load-bearing — without it every join
+branch recomputes the signature pipeline — but the returned
+DataFrame outlives the call, so the operator cannot unpersist before
+returning.
 
 The contract: every such operator attaches its persisted frames to
 the result via :func:`track_persisted`; callers release them with

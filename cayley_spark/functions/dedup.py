@@ -136,15 +136,31 @@ def duplicate_clusters(
     )
 
 
+def let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Catalyst inlines a column expression into every reference to it,
+    and it does no common-subexpression elimination across
+    higher-order functions, so an expression that ``body`` reads n
+    times runs n times per row. A lambda argument is evaluated once:
+    ``value`` is bound as the lambda variable of a ``transform`` over
+    a one-element array, and ``[0]`` unwraps the result."""
+    return F.transform(F.array(value), body)[0]
+
+
 def word_shingles(col: Column, k: int = 3) -> Column:
     """k-word shingles (lowercased). Returns array<string>; distinct."""
+
+    def shingle(toks):
+        n = F.size(toks)
+        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+        sh = F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))
+        )
+        return F.array_distinct(F.when(n >= k, sh).otherwise(F.array()))
+
     toks = F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))
-    )
-    return F.array_distinct(F.when(n >= k, sh).otherwise(F.array()))
+    return let(toks, shingle)
 
 
 def _seeded_md5(i: int):
@@ -180,6 +196,53 @@ def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
             F.md5(F.concat_ws("|", F.slice(sig, b * rows + 1, rows)))
             for b in range(bands)
         ]
+    )
+
+
+def minhash_rows(text: Column, k: int, num_hashes: int) -> Column:
+    """The MinHash signature kernel, as a generator column for
+    ``select``: one ``(sh, sig)`` row per document, its distinct
+    k-word shingles and their signature. Both are NULL for a document
+    under ``k`` tokens, so the row survives for the exact-digest
+    passes.
+
+    The shingle array is bound once with :func:`let`, so the hash
+    minima read one lambda variable rather than one tokenizer each.
+    The pair leaves through ``inline``: a generator is not a Project,
+    so project-collapse cannot inline it back into the consumers'
+    band slices, null tests and verification joins."""
+
+    def pair(sh):
+        has = F.size(sh) > 0
+        return F.array(
+            F.struct(
+                F.when(has, sh).alias("sh"),
+                F.when(has, minhash_signature(sh, num_hashes)).alias("sig"),
+            )
+        )
+
+    return F.inline(let(word_shingles(text, k), pair))
+
+
+def _sig_frame(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
+) -> DataFrame:
+    """(id, digest, sh, sig) for every row of ``df``: the kernel plus
+    the md5 digest the exact pass joins on."""
+    text = F.col(text_col)
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.md5(text).alias("digest"),
+        minhash_rows(text, k, num_hashes),
+    )
+
+
+def _banded(sigs: DataFrame, bands: int, rows: int, *cols) -> DataFrame:
+    """``cols`` plus (band, bh), one row per LSH band of every row of
+    a kernel frame that has a signature."""
+    bh = lsh_bands(F.col("sig"), bands, rows)
+    return sigs.where(F.col("sig").isNotNull()).select(
+        *cols, F.posexplode(bh).alias("band", "bh")
     )
 
 
@@ -254,27 +317,18 @@ def minhash_lsh_pairs(
     O(buckets x cap²) instead of O(hottest-bucket²). Byte-identical
     boilerplate inside a skipped bucket is ``exact_duplicate_groups``'s
     job — it never goes through LSH."""
-    rows = num_hashes // bands
-    # Persist the two expensive intermediates: `sh` (tokenize+shingle)
-    # and `banded` (16 md5 minima per doc). Without this, the a/b
-    # sides of the bucket self-join and the verification joins each
-    # recompute the whole pipeline, and Catalyst's project-collapse
-    # inlines the signature tree into every band slice (4x the md5
-    # work) — measured as the dominant cost, not the joins.
-    sh = (
+    # One persisted kernel frame: without it the a/b sides of the
+    # bucket self-join and both verification joins each recompute the
+    # tokenizer and the signature.
+    sig = (
         df.select(
             F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), k).alias("sh"),
+            minhash_rows(F.col(text_col), k, num_hashes),
         )
-        .where(F.size("sh") > 0)
+        .where(F.col("sig").isNotNull())
         .persist()
     )
-    sig = sh.select(
-        "id", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    ).persist()
-    banded = sig.select(
-        "id", F.posexplode(lsh_bands(F.col("sig"), bands, rows)).alias("band", "bh")
-    )
+    banded = _banded(sig, bands, num_hashes // bands, "id")
     # both sides guarded: same result as one-sided (a bucket dies if
     # either side is filtered) but the identical subtrees let Catalyst
     # reuse one shuffle exchange for the self-join
@@ -290,9 +344,9 @@ def minhash_lsh_pairs(
     from ._cache import track_persisted
 
     if jaccard_threshold is None:
-        return track_persisted(pairs, sh, sig)
-    sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+        return track_persisted(pairs, sig)
+    sh_a = sig.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = sig.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = inter.cast("double") / union
@@ -302,7 +356,6 @@ def minhash_lsh_pairs(
         .withColumn("jaccard", jac)
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard"),
-        sh,
         sig,
     )
 
@@ -954,13 +1007,9 @@ def simhash64(col: Column, k: int = 2) -> Column:
         lambda acc, x: F.zip_with(acc, signs(x), lambda a, s: a + s),
     )
 
-    # pack sign bits into a long: sum(counts[b] > 0 ? 2^b : 0).
-    # The bit loop references the accumulator 64 times, so bind the
-    # aggregate ONCE as a lambda variable (spark_optimization_guide
-    # §1.2 — Catalyst inlines a column expression into every
-    # reference with no CSE across HOFs; the unbound form re-ran the
-    # whole shingle-hash aggregate 64x per row, 192 tokenizations in
-    # the r16 plan dump).
+    # pack sign bits into a long: sum(counts[b] > 0 ? 2^b : 0). The
+    # bit loop reads the accumulator 64 times (unbound: 192
+    # tokenizations per row in the r16 plan dump).
     def pack(cnts: Column) -> Column:
         out = F.lit(0).cast("long")
         for b in range(63):
@@ -971,7 +1020,7 @@ def simhash64(col: Column, k: int = 2) -> Column:
             F.lit(0)
         )
 
-    return F.transform(F.array(counts), pack)[0]
+    return let(counts, pack)
 
 
 def benchmark_contamination(
@@ -1141,70 +1190,68 @@ def dedup_against(
     (see ``dedup_index.LSHDedupIndex``); nothing here rescans
     existing TEXT except for the candidate pairs.
     """
-    rows = num_hashes // bands
+    nsig = _sig_frame(new, id_col, text_col, k, num_hashes).persist()
+    esig = _sig_frame(existing, id_col, text_col, k, num_hashes).persist()
+    dup = _duplicate_ids(
+        nsig, esig, id_col, bands, num_hashes // bands,
+        jaccard_threshold, max_bucket_size,
+    )
+    from ._cache import track_persisted
 
-    def prep(df, side):
-        # sh persisted BELOW sig (minhash_lsh_pairs' barrier, r16):
-        # without it Catalyst's project-collapse inlines the
-        # tokenize+shingle tree into each of sig's 16 hash minima and
-        # the size filter — ~18 shingle evaluations per row in the one
-        # sig cache build. The cached shingle column makes each of
-        # those references a column read.
-        sh = (
-            df.select(
-                F.col(id_col).alias(f"id_{side}"),
-                word_shingles(F.col(text_col), k).alias(f"sh_{side}"),
-            )
-            .where(F.size(f"sh_{side}") > 0)
-            .persist()
-        )
-        sig = sh.select(
-            f"id_{side}",
-            f"sh_{side}",
-            minhash_signature(F.col(f"sh_{side}"), num_hashes).alias("sig"),
-        ).persist()
-        banded = sig.select(
-            f"id_{side}",
-            F.posexplode(
-                lsh_bands(F.col("sig"), bands, rows)
-            ).alias("band", "bh"),
-        )
-        return sh, sig, banded
+    return track_persisted(
+        new.join(dup, id_col, "left_anti"), nsig, esig
+    )
 
-    sh_n, sig_n, band_n = prep(new, "n")
-    sh_e, sig_e, band_e = prep(existing, "e")
-    # hot-bucket guard: occupancy counted over BOTH sides (the pair
-    # product of a bucket is n_new x n_existing), new side filtered —
-    # a skipped bucket's byte-identical members still fall to the
-    # exact-digest pass below, which is LSH-free
+
+def _duplicate_ids(
+    nsig: DataFrame,
+    esig: DataFrame,
+    id_col: str,
+    bands: int,
+    rows: int,
+    jaccard_threshold: float,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Distinct ids, in one column named ``id_col``, of the rows of
+    ``nsig`` that duplicate a row of ``esig``; both are
+    ``_sig_frame`` frames. Shared by ``dedup_against`` and
+    ``LSHDedupIndex.duplicate_ids``.
+
+    - NEAR: the new bands join the existing bands, and candidates are
+      verified by exact shingle Jaccard. Only (id, band, bh) rides the
+      band join; shingle sets are fetched by id for candidate pairs
+      only. Ids are never joined across the two sides, so their types
+      may differ.
+    - EXACT: a digest semi-join, unaffected by the hot-bucket guard.
+
+    The guard counts bucket occupancy over BOTH sides (a bucket's pair
+    product is n_new x n_existing) and filters the new side."""
+    band_n = _banded(nsig, bands, rows, F.col("id").alias("id_n"))
+    band_e = _banded(esig, bands, rows, F.col("id").alias("id_e"))
     both = band_n.select("band", "bh").unionAll(band_e.select("band", "bh"))
-    band_n = _skip_hot_buckets(band_n, both, max_bucket_size)
     cand = (
-        band_n.join(band_e, ["band", "bh"])
+        _skip_hot_buckets(band_n, both, max_bucket_size)
+        .join(band_e, ["band", "bh"])
         .select("id_n", "id_e")
         .dropDuplicates()
     )
     inter = F.size(F.array_intersect("sh_n", "sh_e"))
     union = F.size("sh_n") + F.size("sh_e") - inter
-    near_ids = (
-        cand.join(sig_n.select("id_n", "sh_n"), "id_n")
-        .join(sig_e.select("id_e", "sh_e"), "id_e")
+    near = (
+        cand.join(
+            nsig.select(F.col("id").alias("id_n"), F.col("sh").alias("sh_n")),
+            "id_n",
+        )
+        .join(
+            esig.select(F.col("id").alias("id_e"), F.col("sh").alias("sh_e")),
+            "id_e",
+        )
         .where(inter.cast("double") / union >= jaccard_threshold)
         .select(F.col("id_n").alias(id_col))
-        .dropDuplicates()
     )
-    exact_ids = (
-        new.select(F.col(id_col), F.md5(F.col(text_col)).alias("__dg"))
-        .join(
-            existing.select(F.md5(F.col(text_col)).alias("__dg")),
-            "__dg",
-            "left_semi",
-        )
+    exact = (
+        nsig.select(F.col("id").alias(id_col), "digest")
+        .join(esig.select("digest"), "digest", "left_semi")
         .select(id_col)
     )
-    dup_ids = near_ids.unionAll(exact_ids).dropDuplicates()
-    from ._cache import track_persisted
-
-    return track_persisted(
-        new.join(dup_ids, id_col, "left_anti"), sh_n, sig_n, sh_e, sig_e
-    )
+    return near.unionAll(exact).dropDuplicates()

@@ -38,45 +38,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import lsh_bands, minhash_signature, word_shingles
+from .dedup import _duplicate_ids, _sig_frame
 
 _META_SCHEMA = (
     "k int, num_hashes int, bands int, id_type string, token string"
 )
-
-
-def _sig_frame(
-    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
-) -> DataFrame:
-    """(id, digest, sh, sig) for every row of ``df`` — sig/sh NULL for
-    documents with no k-shingle (shorter than k tokens), which keeps
-    them visible to the exact-digest pass.
-
-    Expression shape (r16, the _signed/quality_gate_struct lesson):
-    the shingle array is bound ONCE as a higher-order-function lambda
-    variable and the (sh, sig) pair rides ONE inline() generator —
-    the previous two-select form let project-collapse inline the
-    tokenize+shingle tree into the size guard, the null test and each
-    of the 16 hash minima (~20 evaluations per row in the one build/
-    persist pass). inline() evaluates its input exactly once per row
-    and the struct is always non-null (null FIELDS for sub-k docs),
-    so every document still emits exactly one row."""
-
-    def pair(s):
-        has = F.size(s) > 0
-        return F.struct(
-            F.when(has, s).alias("sh"),
-            F.when(has, minhash_signature(s, num_hashes)).alias("sig"),
-        )
-
-    bound = F.transform(
-        F.array(word_shingles(F.col(text_col), k)), pair
-    )
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col)).alias("digest"),
-        F.inline(bound),
-    )
 
 
 class LSHDedupIndex:
@@ -302,66 +268,21 @@ class LSHDedupIndex:
 
         LSH buckets with more than ``max_bucket_size`` combined
         occupants (batch + index) are skipped — same hot-bucket guard
-        and recall trade-off as ``dedup.dedup_against``; the exact
-        digest semi-join below is unaffected by the skip."""
+        and recall trade-off as ``dedup.dedup_against``, through the
+        same near/exact pass (``dedup._duplicate_ids``); the exact
+        digest semi-join is unaffected by the skip."""
         self._check_id_type(new, id_col)
-        rows = self.num_hashes // self.bands
-        nsig = _sig_frame(new, id_col, text_col, self.k, self.num_hashes)
         from ._cache import track_persisted
 
-        nsig = nsig.persist()
-        # NOTE: only (id, band, bh) ride the banded explode — the
-        # Jaccard verify re-fetches shingle sets from the persisted
-        # nsig by id for candidate pairs only, so the docstring's
-        # "only the tiny banded projection shuffles" holds literally
-        band_n = nsig.where(F.col("sig").isNotNull()).select(
-            F.col("id").alias("id_n"),
-            F.posexplode(
-                lsh_bands(F.col("sig"), self.bands, rows)
-            ).alias("band", "bh"),
+        nsig = _sig_frame(
+            new, id_col, text_col, self.k, self.num_hashes
+        ).persist()
+        dup = _duplicate_ids(
+            nsig, self.sigs, id_col, self.bands,
+            self.num_hashes // self.bands,
+            jaccard_threshold, max_bucket_size,
         )
-        esig = self.sigs
-        band_e = esig.where(F.col("sig").isNotNull()).select(
-            F.col("id").alias("id_e"),
-            F.posexplode(
-                lsh_bands(F.col("sig"), self.bands, rows)
-            ).alias("band", "bh"),
-        )
-        from .dedup import _skip_hot_buckets
-
-        both = band_n.select("band", "bh").unionAll(
-            band_e.select("band", "bh")
-        )
-        cand = (
-            _skip_hot_buckets(
-                band_n.select("id_n", "band", "bh"), both, max_bucket_size
-            )
-            .join(band_e, ["band", "bh"])
-            .select("id_n", "id_e")
-            .dropDuplicates()
-        )
-        inter = F.size(F.array_intersect("sh_n", "sh_e"))
-        union = F.size("sh_n") + F.size("sh_e") - inter
-        near = (
-            cand.join(
-                nsig.select(F.col("id").alias("id_n"), F.col("sh").alias("sh_n")),
-                "id_n",
-            )
-            .join(
-                esig.select(F.col("id").alias("id_e"), F.col("sh").alias("sh_e")),
-                "id_e",
-            )
-            .where(inter.cast("double") / union >= jaccard_threshold)
-            .select(F.col("id_n").alias(id_col))
-        )
-        exact = (
-            nsig.select(F.col("id").alias(id_col), "digest")
-            .join(esig.select("digest"), "digest", "left_semi")
-            .select(id_col)
-        )
-        return track_persisted(
-            near.unionAll(exact).dropDuplicates(), nsig
-        )
+        return track_persisted(dup, nsig)
 
     def dedup(
         self,

@@ -78,35 +78,30 @@ def language_guess(col: Column, _toks: Column | None = None) -> Column:
     ``_toks``: pre-bound token array (``tokens(col)``) — passed by
     :func:`quality_gate_struct` so the fused gate evaluates the
     tokenization once per row instead of once per reference."""
+    from .dedup import let
+
     toks = tokens(col) if _toks is None else _toks
     langs = sorted(_LANG_MARKERS.items())
 
-    # Bind the per-language marker counts ONCE per row (the
-    # quality_gate_struct pattern, spark_optimization_guide §1.2):
-    # `best` references every score and the argmax chain references
-    # `best` per language, so the flat form re-inlined each score —
-    # and with it the tokenization — quadratically (24 tokenizations
-    # per row in the r16 t_langid plan dump). Binding the score array
-    # as a lambda variable makes every reference an array index.
-    def pick(s):
-        sc = s["sc"]
+    # the argmax chain reads every score once per language (unbound:
+    # 24 tokenizations per row in the r16 t_langid plan dump)
+    def pick(sc):
         best = F.array_max(sc)
         out = F.lit("unknown")
         for i in range(len(langs) - 1, -1, -1):
             out = F.when(sc[i] == best, F.lit(langs[i][0])).otherwise(out)
         return F.when(best == 0, F.lit("unknown")).otherwise(out)
 
-    def body(s):
-        tk = s["toks"]
+    def body(tk):
         sc = F.array(
             *[
                 F.size(F.filter(tk, lambda t: t.isin(*markers)))
                 for _, markers in langs
             ]
         )
-        return F.transform(F.array(F.struct(sc.alias("sc"))), pick)[0]
+        return let(sc, pick)
 
-    return F.transform(F.array(F.struct(toks.alias("toks"))), body)[0]
+    return let(toks, body)
 
 
 def fingerprint(col: Column) -> Column:
@@ -444,16 +439,12 @@ def canonicalize_url(col: Column, fold_host_aliases: bool = False) -> Column:
             F.array_join(fixed, ""),
         )
 
-    # Bind the shared pieces ONCE per row at each level (the
-    # quality_gate_struct pattern, spark_optimization_guide §1.2):
-    # the flat expression tree re-inlined the whole extraction chain
-    # into every reference — path alone is referenced 5x by pnorm,
-    # each copy carrying its _pct_upper split/transform and the
-    # fragment-strip regex (~70 regexp_replace per row in the r16
-    # plan dump). Level 1 binds the fragment-stripped URL; level 2
-    # binds the extracted components (scheme, userinfo, hostport,
-    # pct-uppered path, normalized query) so the assembly references
-    # only cheap lambda variables.
+    from .dedup import let
+
+    # Bound at two levels: the fragment-stripped URL, then its
+    # extracted components, which the assembly reads many times (path
+    # alone 5x; unbound: ~70 regexp_replace per row in the r16 plan
+    # dump).
     u0 = F.regexp_replace(col, r"#.*$", "")
 
     def assemble(s):
@@ -484,8 +475,7 @@ def canonicalize_url(col: Column, fold_host_aliases: bool = False) -> Column:
         )
         return F.when(scheme == "", s["u"]).otherwise(canon)
 
-    def extract(s):
-        u = s["u"]
+    def extract(u):
         scheme = F.lower(
             F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
         )
@@ -520,9 +510,9 @@ def canonicalize_url(col: Column, fold_host_aliases: bool = False) -> Column:
             ),
             F.array_join(params, "&").alias("qnorm"),
         )
-        return F.transform(F.array(inner), assemble)[0]
+        return let(inner, assemble)
 
-    return F.transform(F.array(F.struct(u0.alias("u"))), extract)[0]
+    return let(u0, extract)
 
 
 def url_dedup(
@@ -1408,16 +1398,13 @@ def c4_rules(
     needed; its 3-sentence-span dedup is the span-dedup operator
     family in functions/dedup.py.) Integer counts ride along for
     re-thresholding without a re-scan."""
+    from .dedup import let
+
     c = F.coalesce(F.col(text_col), F.lit(""))
-    # Bind the expensive shared sub-expressions ONCE per row (the
-    # quality_gate_struct pattern, spark_optimization_guide §1.2):
-    # emitting the battery columns directly inlines the kept-line
-    # filter and the sentence regex into every referencing column
-    # (3x each, measured in the r16 plan dump) because Catalyst does
-    # no cross-column CSE over HOF-bearing projections. Lambda
-    # arguments are single-evaluation, and the two-level select keeps
-    # the struct itself evaluated once (CollapseProject does not
-    # inline a non-cheap alias consumed many times).
+    # the battery columns read the kept-line filter and the sentence
+    # regex 3x each (r16 plan dump); the two-level select keeps the
+    # bound struct evaluated once (CollapseProject does not inline a
+    # non-cheap alias consumed many times)
     p0 = _c4_parts(c, min_words_per_line, min_sentences)
     bound = F.struct(
         c.alias("c"),
@@ -1446,7 +1433,7 @@ def c4_rules(
             F.array_join(p["kept"], "\n").alias("clean_text"),
         )
 
-    battery = F.transform(F.array(bound), body)[0]
+    battery = let(bound, body)
     fields = (
         "n_lines",
         "n_kept_lines",
@@ -1898,22 +1885,16 @@ def gopher_rules(
     document has n_lines = 1, so both rules discriminate on its one
     line exactly as the paper's fractions do. Integer counts ride
     along so consumers can re-threshold without a re-scan."""
+    from .dedup import let
+
     c = F.coalesce(F.col(text_col), F.lit(""))
-    # Bind the shared sub-expressions ONCE per row (the
-    # quality_gate_struct pattern, spark_optimization_guide §1.2):
-    # emitting the 16 battery columns directly inlined the
-    # tokenization 24x per row (measured in the r16 plan dump —
-    # Catalyst does no cross-column CSE and the HOF metrics are
-    # CodegenFallback). TWO bound structs, split by input family, so
-    # column pruning still works per family (a line-rules-only
-    # consumer like t_gopher_lines never tokenizes — one opaque
-    # all-battery struct would compute every metric for any field):
-    # the token struct binds (c, toks) at level 1 and the token
-    # metrics at level 2 (each HOF aggregate runs once; the verdicts
-    # then reference cheap bound integers); the line struct binds the
-    # line array once. pass_gopher joins the two via the token
-    # struct's precomputed pass_tok conjunction — integer/boolean
-    # field reads, nothing re-evaluated. The two-level select keeps
+    # Unbound, the 16 battery columns tokenized 24x per row (r16 plan
+    # dump). TWO bound structs, split by input family, so column
+    # pruning still works per family (a line-rules-only consumer like
+    # t_gopher_lines never tokenizes): the token struct binds (c,
+    # toks), then the token metrics, so each HOF aggregate runs once;
+    # the line array is bound once. pass_gopher joins the two via the
+    # token struct's precomputed pass_tok. The two-level select keeps
     # each struct evaluated once (CollapseProject does not inline a
     # non-cheap alias consumed many times).
     tok_metric_keys = (
@@ -1966,16 +1947,14 @@ def gopher_rules(
                 pass_tok.alias("pass_tok"),
             )
 
-        return F.transform(F.array(inner), tok_body2)[0]
+        return let(inner, tok_body2)
 
-    line_bound = F.struct(lines.alias("lines"))
-
-    def line_body(s):
+    def line_body(ls):
         # same shared definitions — only the line-metric entries are
         # referenced, so the dummy text/token args never evaluate
         m = _gopher_metrics(
             F.lit(""), stoplist,
-            _toks=F.array().cast("array<string>"), _lines=s["lines"],
+            _toks=F.array().cast("array<string>"), _lines=ls,
         )
         inner = F.struct(*[m[k].alias(k) for k in line_metric_keys])
 
@@ -1992,10 +1971,10 @@ def gopher_rules(
                 *[v[k].alias(k) for k in line_verdict_keys],
             )
 
-        return F.transform(F.array(inner), line_body2)[0]
+        return let(inner, line_body2)
 
-    gt = F.transform(F.array(tok_bound), tok_body)[0]
-    gl = F.transform(F.array(line_bound), line_body)[0]
+    gt = let(tok_bound, tok_body)
+    gl = let(lines, line_body)
     staged = df.select(id_col, gt.alias("_g_tok"), gl.alias("_g_line"))
     tok, line = F.col("_g_tok"), F.col("_g_line")
     return staged.select(
@@ -2129,26 +2108,21 @@ def quality_gate_struct(
     (pinned by tests/test_text.py), built from the SAME metric
     helpers so the forms cannot drift.
 
-    Why it exists (spark_optimization_guide §1.2 "per-task work"):
-    Catalyst inlines a projected text column into every predicate
-    reference and does no common-subexpression elimination across a
-    higher-order-function-heavy Filter — composing the four gate
-    expressions directly re-evaluated the tokenization 25x and the
-    caller's derived-text projection 36x PER ROW (measured in the
-    r16 plan dump; the gate scan was 3x slower than this form at
-    sf0.1). Binding the shared pieces (coalesced text, token array,
-    line array) as a higher-order function's lambda variable
-    evaluates each ONCE per row — lambdafunction arguments are
-    single-evaluation — and every gate reference is then a cheap
-    variable access. The struct rides ONE transform over a
-    one-element array; callers filter on ``.getField("keep")`` and
-    project ``.getField("clean")``.
+    Why it exists: composing the four gate expressions directly
+    re-evaluated the tokenization 25x and the caller's derived-text
+    projection 36x PER ROW (r16 plan dump; the gate scan was 3x
+    slower than this form at sf0.1). The shared pieces (coalesced
+    text, token array, line array) are bound once with
+    :func:`~cayley_spark.functions.dedup.let`; callers filter on
+    ``.getField("keep")`` and project ``.getField("clean")``.
 
     Null/empty text: binding tokenizes ``coalesce(col, '')`` where
     ``language_guess`` alone reads the raw column, but the composed
     verdict is identical — C4 requires >= 1 kept line, and null or
     empty text has none, so such rows are dropped by both forms
     regardless of the other gates' quirks on null input."""
+    from .dedup import let
+
     c0 = F.coalesce(col, F.lit(""))
     bound = F.struct(
         c0.alias("c"),
@@ -2174,4 +2148,4 @@ def quality_gate_struct(
         keep = lang_ok & gop & parts["keep"]
         return F.struct(keep.alias("keep"), clean.alias("clean"))
 
-    return F.transform(F.array(bound), body)[0]
+    return let(bound, body)

@@ -61,6 +61,10 @@ class CayleyHandler(BaseHTTPRequestHandler):
     # bytes. Safe for every other handler: they all send
     # Content-Length, which satisfies 1.1 keep-alive framing.
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY on every accepted socket: headers and body go out as
+    # two sends, and with Nagle on the body waited for the client's
+    # delayed ACK of the headers — ≈40 ms on every response
+    disable_nagle_algorithm = True
 
     def log_message(self, *args):  # quiet
         pass

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.dedup import lsh_bands, minhash_signature, word_shingles
+from ..functions.dedup import _banded, minhash_rows
 
 
 def _signed(
@@ -56,63 +56,19 @@ def _signed(
     num_hashes: int,
     bands: int,
 ) -> DataFrame:
-    """(id, ts, band, bh, sig) — one row per (doc, band); sub-k-token
-    docs carry no shingles and are dropped (they are the exact-dedup
-    stream's job).
+    """(id, ts, sigs, band, bh) — one row per (doc, band), ``sigs``
+    the signature joined with '|'; sub-k-token docs carry no shingles
+    and are dropped (they are the exact-dedup stream's job).
 
-    Expression shape (r16): the shingle array and the signature are
-    each bound ONCE per row as higher-order-function lambda
-    variables, and the per-band rows ride ONE explode of a
-    pre-assembled (band, bh, sigs) struct array. The previous
-    stacked form let Catalyst's project-collapse inline the
-    signature tree into every reference (concat_ws + each band
-    slice + the null filter) and the shingle tree into each of the
-    16 hash minima — tokenizing per reference instead of per row.
-    This function cannot use minhash_lsh_pairs' persist barrier:
-    the streaming twin runs it inside a stateful query where
-    persist() is unavailable, so the binding must live in the
-    expression itself. Sub-k docs emit an EMPTY struct array and
-    the explode drops them — same rows as the old isNotNull filter,
-    with the when() short-circuit skipping the hash work."""
-    rows = num_hashes // bands
-    out_t = "array<struct<band:int,bh:string,sigs:string>>"
-
-    def per_band(s):
-        # s: the shingle array, evaluated once per row
-        def assemble(g):
-            # g: the 16-slot signature array, evaluated once per row
-            sigs = F.concat_ws("|", g)
-            return F.transform(
-                lsh_bands(g, bands, rows),
-                lambda bh, i: F.struct(
-                    i.alias("band"), bh.alias("bh"), sigs.alias("sigs")
-                ),
-            )
-
-        return F.when(
-            F.size(s) > 0,
-            F.transform(
-                F.array(minhash_signature(s, num_hashes)), assemble
-            )[0],
-        ).otherwise(F.array().cast(out_t))
-
-    banded = F.transform(
-        F.array(word_shingles(F.col(text_col), k)), per_band
-    )[0]
-    return (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.col(ts_col).alias("ts"),
-            F.explode(banded).alias("e"),
-        )
-        .select(
-            "id",
-            "ts",
-            F.col("e.sigs").alias("sigs"),
-            F.col("e.band").alias("band"),
-            F.col("e.bh").alias("bh"),
-        )
-    )
+    Built on the batch kernel (``dedup.minhash_rows``) but without
+    its persist: the streaming twin runs inside a stateful query,
+    where persist() is unavailable."""
+    signed = docs.select(
+        F.col(id_col).alias("id"),
+        F.col(ts_col).alias("ts"),
+        minhash_rows(F.col(text_col), k, num_hashes),
+    ).select("id", "ts", "sig", F.concat_ws("|", "sig").alias("sigs"))
+    return _banded(signed, bands, num_hashes // bands, "id", "ts", "sigs")
 
 
 def neardup_pairs_stream(

@@ -210,6 +210,72 @@ def test_dedup_against_matches_model(spark, new, old, thresh):
     )
 
 
+# Pinned corpus for the fast tier (the fuzz above is slow-tier):
+# planted near-dups, a sub-k byte-identical pair, and one hot bucket.
+# BOILER x6 fills every band bucket of its signature past CAP, so its
+# pairs fall to the exact pass only.
+_NEAR = (
+    "the quick brown fox jumps over the lazy dog while the calm river "
+    "flows past the old stone bridge near the quiet village where the "
+    "baker sells warm bread every single morning to travelers"
+)
+_BOILER = (
+    "permission is hereby granted free of charge to any person "
+    "obtaining a copy of this software and associated documentation"
+)
+CAP = 4
+PINNED_OLD = [
+    (1, _NEAR),
+    (2, "hi there"),
+    (3, "completely unrelated text about spark catalyst optimizer"),
+] + [(10 + i, _BOILER) for i in range(5)]
+PINNED_NEW = [
+    (101, _NEAR.replace("morning", "evening")),
+    (102, "hi there"),
+    (103, "bye now"),
+    (110, _BOILER),
+    (111, _BOILER.replace("documentation", "files")),
+    (130, "an entirely novel document with its own distinct words"),
+]
+
+
+def test_pinned_corpus_matches_models(spark):
+    """minhash_lsh_pairs, dedup_against and LSHDedupIndex.dedup on one
+    pinned corpus, each equal to its python model."""
+    from cayley_spark.functions.dedup import dedup_against, minhash_lsh_pairs
+    from cayley_spark.functions.dedup_index import LSHDedupIndex
+
+    schema = "doc_id long, text string"
+    odf = spark.createDataFrame(PINNED_OLD, schema)
+    ndf = spark.createDataFrame(PINNED_NEW, schema)
+    rows = PINNED_OLD + PINNED_NEW
+    want_pairs = _model_pairs(rows, 0.5, cap=CAP)
+    # the corpus exercises what it claims to: a verified near pair, and
+    # boilerplate pairs that only the cap removes
+    boiler = {10, 11, 12, 13, 14, 110, 111}
+    assert (1, 101) in want_pairs
+    assert not any({a, b} <= boiler for a, b in want_pairs)
+    assert any({a, b} <= boiler for a, b in _model_pairs(rows, 0.5, None))
+    got_pairs = {
+        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+        for r in minhash_lsh_pairs(
+            spark.createDataFrame(rows, schema),
+            jaccard_threshold=0.5,
+            max_bucket_size=CAP,
+        ).collect()
+    }
+    assert got_pairs == want_pairs
+
+    want_kept = _model_against(PINNED_NEW, PINNED_OLD, 0.5, cap=CAP)
+    # near (101), sub-k exact (102) and hot-bucket exact (110) drop
+    assert {101, 102, 110}.isdisjoint(want_kept) and 130 in want_kept
+    got = dedup_against(ndf, odf, jaccard_threshold=0.5, max_bucket_size=CAP)
+    assert {r["doc_id"] for r in got.collect()} == want_kept
+    idx = LSHDedupIndex.build(odf)
+    got = idx.dedup(ndf, jaccard_threshold=0.5, max_bucket_size=CAP)
+    assert {r["doc_id"] for r in got.collect()} == want_kept
+
+
 # ---------------- repetition n-gram battery model fuzz ----------
 # (lives here to reuse the corpora() strategy; the operator is in
 # functions/text.py)

@@ -349,10 +349,10 @@ def test_persisted_intermediates_tracked_and_released(spark, docs):
     released = sum(
         unpersist_intermediates(df) for df in (lsh, jac, dup)
     )
-    # sh+sig (lsh), postings+sizes (jaccard, r15: the set-size frame
-    # is persisted so both verification-join sides read one cache),
-    # sigs (embedding)
-    assert released == 5
+    # the signature frame (lsh), postings+sizes (jaccard, r15: the
+    # set-size frame is persisted so both verification-join sides read
+    # one cache), sigs (embedding)
+    assert released == 4
     assert persisted_ids() <= before
     # idempotent
     assert unpersist_intermediates(lsh) == 0
@@ -434,7 +434,7 @@ def test_dedup_corpus_end_to_end(docs, spark):
     kept = sorted(r["doc_id"] for r in rows)
     assert kept == [0, 2, 3, 5]  # 1 and 4 are near/exact dups of 0
     assert set(rows[0].asDict()) == {"doc_id", "lang", "text"}
-    assert unpersist_intermediates(out) >= 3  # sh, sig, edges
+    assert unpersist_intermediates(out) == 2  # signature frame, edges
 
 
 def test_tf_idf_top_terms(spark):
@@ -650,7 +650,7 @@ def test_editdist_dup_pairs(docs, spark):
     assert got[(0, 4)] == 0  # exact dup
     assert got[(0, 1)] <= 6  # one-word-off near dup
     assert (0, 2) not in got  # unrelated
-    assert unpersist_intermediates(out) >= 2  # sh + sig released
+    assert unpersist_intermediates(out) == 1  # the signature frame
 
 
 def test_dedup_against(docs, spark):
@@ -663,10 +663,8 @@ def test_dedup_against(docs, spark):
     kept = sorted(r["doc_id"] for r in out.collect())
     assert kept == [3, 5]  # 4 removed: duplicates existing doc 0
     assert set(out.columns) == set(docs.columns)
-    # r16: each side tracks its shingle frame AND its signature frame
-    # (the sh persist is the barrier that stops project-collapse from
-    # inlining the tokenize+shingle tree into the 16 hash minima)
-    assert unpersist_intermediates(out) == 4
+    # one signature frame per side
+    assert unpersist_intermediates(out) == 2
 
 
 def test_dedup_against_short_exact_dup(spark):

@@ -392,6 +392,30 @@ def test_responses_advertise_http_1_1_raw_socket(srv):
     assert first.startswith(b"HTTP/1.1 2"), first[:40]
 
 
+def test_accepted_sockets_disable_nagle(srv, monkeypatch):
+    """Every accepted connection has TCP_NODELAY set. A response goes
+    out as two sends (headers, then body); with Nagle on, the body
+    waits for the client's delayed ACK of the headers, ≈40 ms per
+    response."""
+    import socket
+
+    from cayley_spark.server.http import CayleyHandler
+
+    seen = []
+    setup = CayleyHandler.setup
+
+    def recording_setup(self):
+        setup(self)
+        seen.append(
+            self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        )
+
+    monkeypatch.setattr(CayleyHandler, "setup", recording_setup)
+    with urllib.request.urlopen(f"{srv}/health") as r:
+        r.read()
+    assert seen and all(seen), seen
+
+
 def test_chunked_dump_dechunks_by_the_spec(srv):
     """Manually de-chunk /api/v2/read over a raw socket (what a
     spec-compliant non-CPython client does) and check the nquads

@@ -297,6 +297,24 @@ def test_battery_structs_tokenize_once_and_prune(spark, entry):
     assert c4_plan.count("regexp_extract_all") == 1, c4_plan
 
 
+def test_minhash_kernel_tokenizes_once(spark):
+    """word_shingles binds its token array once (it was referenced by
+    the size test, the index range and the shingle lambda: 3
+    tokenizations per row), and a banded frame over the signature
+    kernel carries exactly num_hashes minima + bands band hashes."""
+    from pyspark.sql import functions as F
+
+    from cayley_spark.functions.dedup import _banded, minhash_rows, word_shingles
+
+    df = spark.createDataFrame([(1, "a b c d e")], "id long, text string")
+    plan = optimized_of(df.select(word_shingles(F.col("text")).alias("sh")))
+    assert plan.count("regexp_extract_all") == 1, plan
+    signed = df.select("id", minhash_rows(F.col("text"), k=3, num_hashes=16))
+    plan = optimized_of(_banded(signed, 4, 4, "id"))
+    assert plan.count("md5(") == 16 + 4, plan
+    assert plan.count("regexp_extract_all") == 1, plan
+
+
 def test_substr_dedup_no_pair_join_bounded_shuffles(spark, entry):
     """d_substr (ExactSubstr): documents must never pair with each
     other — no cartesian/nested-loop — and the whole keep-one plan
