@@ -15,9 +15,9 @@ seeing the plan the bench actually runs.
 Session-global counters are stripped from the written text so that
 dumps of two checkouts diff only where a plan really changed: lambda
 variables lose their numeric suffix (``lambda x_12#345`` → ``lambda
-x``), attribute ids their number (``id#12L`` → ``id#L``), and RDD
-names their id and Python call site, and exchange ``plan_id``
-arguments their id.
+x``), attribute ids their number (``id#12L`` → ``id#L``), RDD names
+their id and Python call site, and exchange ``plan_id`` arguments
+their id.
 """
 
 from __future__ import annotations
